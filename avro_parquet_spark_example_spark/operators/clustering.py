@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from avro_parquet_spark_example_spark.operators.iteration import iterate, unroll_sql
 from avro_parquet_spark_example_spark.operators.simsearch import sql_double_array
 from avro_parquet_spark_example_spark.registry import register
 from avro_parquet_spark_example_spark.sources.catalog import load
@@ -181,10 +182,7 @@ KM_EXACT_ROUNDS = 2
     c0 AS (SELECT vec_id AS cluster, pos, v7 AS c7 FROM fixed
            WHERE vec_id < 4),
     """
-    + ",".join(
-        _km_round_sql(f"c{i}", f"a{i+1}", f"c{i+1}")
-        for i in range(KM_EXACT_ROUNDS)
-    )
+    + unroll_sql(_km_round_sql, KM_EXACT_ROUNDS, "c{i}", "a{j}", "c{j}")
     + """
     SELECT c.cluster, c.pos, c.c7, n.n
     FROM c2 c
@@ -208,7 +206,9 @@ def cluster_kmeans_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined (vec, cluster) sum + a per-vector argmin window;
     the update is one (cluster, dim) aggregate — Lloyd's algorithm in
     exactly the shape kmeans_fit runs it, with quantization replacing the
-    float centroids that keep that variant rows-only."""
+    float centroids that keep that variant rows-only. The member count
+    rides in that aggregate: a member has one row per dim, so
+    ``count(*)`` per (cluster, pos) is the cluster size."""
     e = load(spark, sf_dir, "embeddings")
     # NO checkpoint on `fixed` (r16, bounded-frame rule): it is the
     # corpus ×64 posexplode — materializing it to executor storage at
@@ -230,8 +230,7 @@ def cluster_kmeans_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from pyspark.sql import Window
 
-    assign = None
-    for _ in range(KM_EXACT_ROUNDS):
+    def step(cents: DataFrame) -> DataFrame:
         d = (
             fixed.join(F.broadcast(cents), "pos")
             .groupBy("vec_id", "cluster")
@@ -247,20 +246,20 @@ def cluster_kmeans_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("rn") == 1)
             .select("vec_id", "cluster")
         )
-        cents = (
+        return (
             assign.join(fixed, "vec_id")
             .groupBy("cluster", "pos")
-            .agg(
-                F.floor(
-                    F.sum("v7").cast("double") / F.count(F.lit(1))
-                ).alias("c7")
+            .agg(F.sum("v7").alias("s"), F.count(F.lit(1)).alias("n"))
+            .select(
+                "cluster",
+                "pos",
+                F.floor(F.col("s").cast("double") / F.col("n")).alias("c7"),
+                "n",
             )
-            .localCheckpoint(eager=True)
         )
-    n = assign.groupBy("cluster").agg(F.count(F.lit(1)).alias("n"))
-    return cents.join(F.broadcast(n), "cluster").select(
-        "cluster", "pos", "c7", "n"
-    )
+
+    cents, _ = iterate(cents, step, KM_EXACT_ROUNDS)
+    return cents
 
 
 # ---------------------------------------------------------------------------

@@ -26,6 +26,7 @@ from avro_parquet_spark_example_spark.operators.capping import (
     capped_group,
     oversized_groups,
 )
+from avro_parquet_spark_example_spark.operators.iteration import iterate, symmetrize
 from avro_parquet_spark_example_spark.registry import register
 from avro_parquet_spark_example_spark.sources.catalog import load, spread
 
@@ -527,7 +528,7 @@ def connected_components(
     the corpus — a driver-side union-find finishes in one pass instead of
     paying multi-round job latency. Larger edge sets run iterative
     min-label propagation: each round is two shuffle joins, with
-    ``localCheckpoint`` cutting lineage so plans stay bounded; converges in
+    ``iterate`` cutting lineage so plans stay bounded; converges in
     O(diameter) rounds (near-dup clusters are shallow); ``max_iter`` bounds
     the worst case."""
     # One action answers BOTH "how big?" and "give me the edges": a limit
@@ -547,42 +548,32 @@ def connected_components(
         return edges.sparkSession.createDataFrame(
             list(labels.items()), schema="id long, cluster_id long"
         )
-    sym = (
-        edges.select("a", "b")
-        .unionByName(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .localCheckpoint(eager=True)
+    sym = symmetrize(edges, ends=("a", "b"), names=("a", "b")).localCheckpoint(
+        eager=True
     )
-    labels = (
-        sym.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("cluster_id", F.col("id"))
-    )
-    prev_sum: int | None = None
-    rounds = 0
-    for _ in range(max_iter):
-        rounds += 1
+
+    def step(labels: DataFrame) -> DataFrame:
         neighbor_min = (
             sym.join(labels, sym.b == labels.id)
             .groupBy(sym.a.alias("id"))
             .agg(F.min("cluster_id").alias("nbr_min"))
         )
-        new_labels = (
-            labels.join(neighbor_min, "id", "left")
-            .select(
-                "id",
-                F.least(
-                    F.col("cluster_id"), F.coalesce("nbr_min", F.col("cluster_id"))
-                ).alias("cluster_id"),
-            )
-            .localCheckpoint(eager=True)
+        return labels.join(neighbor_min, "id", "left").select(
+            "id",
+            F.least(
+                F.col("cluster_id"), F.coalesce("nbr_min", F.col("cluster_id"))
+            ).alias("cluster_id"),
         )
-        labels = new_labels
-        # Labels only ever decrease, so an unchanged sum ⟺ a fixpoint —
-        # one cheap aggregate instead of a join-based diff per round.
-        new_sum = labels.agg(F.sum("cluster_id")).collect()[0][0]
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
+
+    labels = (
+        sym.select(F.col("a").alias("id"))
+        .distinct()
+        .withColumn("cluster_id", F.col("id"))
+    )
+    # Labels only ever decrease, so an unchanged sum ⟺ a fixpoint — one
+    # aggregate observed on each round's checkpoint job instead of a
+    # join-based diff per round.
+    labels, rounds = iterate(labels, step, max_iter, until=F.sum("cluster_id"))
     LAST_CC_INFO.clear()
     LAST_CC_INFO.update(
         mode="iterative", rounds=rounds, probe_edges=len(head)
@@ -628,9 +619,8 @@ def exact_verified_pairs(
     shingle side then prunes by a pushed-down filter on the doc scan
     instead of computing + broadcasting the distinct candidate-id set —
     one less plan and one less broadcast job when the caller statically
-    knows the universe. Shared by ``dedup_minhash_verified`` and
-    ``tools/minhash_profile.py`` so the profiler can never measure a
-    stale copy of the stage."""
+    knows the universe. Its stage cost split is recorded in SCALING.md
+    and OPTIMIZATION_r16.md."""
     hint = F.broadcast if bounded else (lambda df: df)
     if doc_filter is not None:
         doc_side = docs.filter(doc_filter)

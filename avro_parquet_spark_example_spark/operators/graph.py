@@ -30,9 +30,10 @@ Scale notes (100 TB of events):
     keys; the classic O(E^1.5) plan. AQE splits oversized partitions when
     endpoints skew (celebrity nodes).
   * PageRank: per-iteration cost is one join (ranks × out-edges) + one
-    aggregation — all shuffles keyed on node id; ``localCheckpoint``
-    truncates lineage so the 10th iteration plans as one round, not ten.
-    No driver-side state at all beyond the loop counter.
+    aggregation — all shuffles keyed on node id. Every round loop here
+    but HITS runs on the shared ``iterate`` kernel (operators/
+    iteration.py): it checkpoints each generation, so the 10th iteration
+    plans as one round, not ten, and frees the generation it replaced.
 """
 
 from __future__ import annotations
@@ -43,6 +44,11 @@ from pyspark.sql import functions as F
 from avro_parquet_spark_example_spark.operators.capping import (
     capped_group,
     oversized_groups,
+)
+from avro_parquet_spark_example_spark.operators.iteration import (
+    iterate,
+    symmetrize,
+    unroll_sql,
 )
 from avro_parquet_spark_example_spark.registry import register
 from avro_parquet_spark_example_spark.sources.catalog import load, ts_us
@@ -70,14 +76,23 @@ def _edges_sql(max_user: int | None = None) -> str:
 """
 
 
-def cooccurrence_edges(
-    spark: SparkSession, sf_dir: str, max_user: int | None = None
+def _sym_sql(max_user: int | None = None) -> str:
+    """:func:`_edges_sql` plus the symmetrized ``sym`` CTE — the SQL twin
+    of ``symmetrize``."""
+    return _edges_sql(max_user) + """
+    , sym AS (
+        SELECT u AS src, v AS dst FROM edges
+        UNION ALL
+        SELECT v, u FROM edges
+    )"""
+
+
+def _bucket_pairs(
+    spark: SparkSession, sf_dir: str, max_user: int | None
 ) -> DataFrame:
-    """Distinct oriented edges (u < v): users sharing a (type, 5-minute)
-    bucket. The distinct-before-join projection is what bounds cost — the
-    self-join runs on unique (bucket, user) memberships, not raw events.
-    ``max_user`` is the deterministic node cap quadratic consumers use to
-    pin their cost at large SFs."""
+    """Self-join ``a`` × ``b`` of the distinct (type, 5-minute bucket,
+    user) memberships, oriented a.user_id < b.user_id — one row per
+    shared bucket of a user pair."""
     e = load(spark, sf_dir, "events")
     if max_user is not None:
         e = e.filter(F.col("user_id") < max_user)
@@ -90,17 +105,38 @@ def cooccurrence_edges(
         )
         .distinct()
     )
-    a = m.alias("a")
-    b = m.alias("b")
+    a, b = m.alias("a"), m.alias("b")
+    return a.join(
+        b,
+        (F.col("a.event_type") == F.col("b.event_type"))
+        & (F.col("a.bucket") == F.col("b.bucket"))
+        & (F.col("a.user_id") < F.col("b.user_id")),
+    )
+
+
+def cooccurrence_edges(
+    spark: SparkSession, sf_dir: str, max_user: int | None = None
+) -> DataFrame:
+    """Distinct oriented edges (u < v): users sharing a (type, 5-minute)
+    bucket. The distinct-before-join projection is what bounds cost — the
+    self-join runs on unique (bucket, user) memberships, not raw events.
+    ``max_user`` is the deterministic node cap quadratic consumers use to
+    pin their cost at large SFs."""
     return (
-        a.join(
-            b,
-            (F.col("a.event_type") == F.col("b.event_type"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.user_id") < F.col("b.user_id")),
-        )
+        _bucket_pairs(spark, sf_dir, max_user)
         .select(F.col("a.user_id").alias("u"), F.col("b.user_id").alias("v"))
         .distinct()
+    )
+
+
+def _degrees(e: DataFrame, name: str = "degree") -> DataFrame:
+    """(node, ``name``): undirected degree over a (u, v) edge list —
+    appearances on either side."""
+    return (
+        e.select(F.col("u").alias("node"))
+        .unionAll(e.select(F.col("v").alias("node")))
+        .groupBy("node")
+        .agg(F.count(F.lit(1)).alias(name))
     )
 
 
@@ -130,11 +166,7 @@ def graph_degree_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     # precedent) — the u/v union branches otherwise re-plan the
     # co-occurrence self-join twice (4 events scans in one plan; r15)
     e = cooccurrence_edges(spark, sf_dir).localCheckpoint(eager=True)
-    nodes = e.select(F.col("u").alias("node")).unionAll(
-        e.select(F.col("v").alias("node"))
-    )
-    deg = nodes.groupBy("node").agg(F.count(F.lit(1)).alias("degree"))
-    return deg.groupBy("degree").agg(F.count(F.lit(1)).alias("n_nodes"))
+    return _degrees(e).groupBy("degree").agg(F.count(F.lit(1)).alias("n_nodes"))
 
 
 #: Node cap for the quadratic triangle join: keeps the sf0.1 wedge count
@@ -223,37 +255,56 @@ def graph_pagerank(
     return pagerank_edges(e, damping=damping, iters=iters)
 
 
+def _rank_graph(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(sym, deg): the fixed frames every PageRank round joins — both
+    orientations of each edge (undirected PageRank walks it both ways)
+    and (node, out_deg), each checkpointed once."""
+    sym = symmetrize(edges).localCheckpoint(eager=True)
+    deg = (
+        sym.groupBy(F.col("src").alias("node"))
+        .agg(F.count(F.lit(1)).alias("out_deg"))
+        .localCheckpoint(eager=True)
+    )
+    return sym, deg
+
+
+def _exact_shares(ranks: DataFrame, deg: DataFrame, sym: DataFrame) -> DataFrame:
+    """(node, share) per directed edge: the source's rank over its
+    out-degree, quantized to DECIMAL(20,12) so per-target sums are exact
+    and order-independent (the graph_pagerank_exact dsum rule)."""
+    return (
+        ranks.join(deg, "node")
+        .select(
+            "node",
+            F.round(F.col("rank").cast("double") / F.col("out_deg"), 12)
+            .cast("decimal(20,12)")
+            .alias("share"),
+        )
+        .join(sym, F.col("node") == F.col("src"))
+        .select(F.col("dst").alias("node"), "share")
+    )
+
+
 def pagerank_edges(
     edges: DataFrame, damping: float = 0.85, iters: int = 10
 ) -> DataFrame:
     """(node, rank) over an oriented (u < v) edge DataFrame — the library
     form the Engine facade exposes; graph_pagerank is its registered
     instance. See that docstring for the iteration/scale analysis."""
-    e = edges
-    # Symmetrize: undirected PageRank walks each edge in both directions.
-    out = (
-        e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionByName(e.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        out.groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).alias("out_deg"))
-        .localCheckpoint(eager=True)
-    )
-    ranks = nodes.select("node", F.lit(1.0).alias("rank"))
-    for _ in range(iters):
+    sym, deg = _rank_graph(edges)
+
+    def step(ranks: DataFrame) -> DataFrame:
         contribs = (
-            ranks.join(nodes, "node")
+            ranks.join(deg, "node")
             .select("node", (F.col("rank") / F.col("out_deg")).alias("share"))
-            .join(out, F.col("node") == F.col("src"))
+            .join(sym, F.col("node") == F.col("src"))
             .select(F.col("dst").alias("node"), F.col("share"))
         )
-        ranks = (
-            contribs.groupBy("node")
-            .agg((F.lit(1 - damping) + F.lit(damping) * F.sum("share")).alias("rank"))
-            .localCheckpoint(eager=True)
+        return contribs.groupBy("node").agg(
+            (F.lit(1 - damping) + F.lit(damping) * F.sum("share")).alias("rank")
         )
+
+    ranks, _ = iterate(deg.select("node", F.lit(1.0).alias("rank")), step, iters)
     return ranks.select("node", F.round("rank", 6).alias("rank"))
 
 
@@ -280,18 +331,19 @@ def _lpa_round_sql(prev: str, out: str) -> str:
 LPA_ROUNDS = 3
 
 
-@register(
-    "graph_label_propagation",
-    oracle=_edges_sql()
-    + """
-    , sym AS (
-        SELECT u AS src, v AS dst FROM edges
-        UNION ALL
-        SELECT v, u FROM edges
-    ),
+#: The oracle's LPA label chain lbl0 → lbl{LPA_ROUNDS} over ``sym``.
+_LPA_SQL = (
+    """,
     lbl0 AS (SELECT DISTINCT src AS node, src AS lbl FROM sym),
     """
-    + ",".join(_lpa_round_sql(f"lbl{i}", f"lbl{i+1}") for i in range(LPA_ROUNDS))
+    + unroll_sql(_lpa_round_sql, LPA_ROUNDS, "lbl{i}", "lbl{j}")
+)
+
+
+@register(
+    "graph_label_propagation",
+    oracle=_sym_sql()
+    + _LPA_SQL
     + """
     SELECT node, lbl AS community FROM lbl3
     """,
@@ -311,31 +363,31 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per round one shuffle join (labels × symmetrized edges) and
     one two-level aggregation — identical profile to the connected-
-    components propagation in operators/dedup.py; ``localCheckpoint``
-    cuts lineage each round."""
-    e = cooccurrence_edges(spark, sf_dir)
-    sym = (
-        e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionByName(e.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint(eager=True)
+    components propagation in operators/dedup.py; ``iterate`` cuts
+    lineage each round."""
+    return label_propagation(cooccurrence_edges(spark, sf_dir))
+
+
+def label_propagation(edges: DataFrame) -> DataFrame:
+    """(node, community) after LPA_ROUNDS deterministic synchronous LPA
+    rounds over an oriented (u < v) edge DataFrame — the library form;
+    ``graph_label_propagation`` and ``graph_modularity`` are its
+    registered oracle-checked instances."""
+    sym = symmetrize(edges).localCheckpoint(eager=True)
+    best = F.max_by(
+        F.col("lbl"), F.struct(F.col("n"), (-F.col("lbl")).alias("neg"))
     )
-    lbl = sym.select(F.col("src").alias("node")).distinct().withColumn(
-        "lbl", F.col("node")
-    )
-    for _ in range(LPA_ROUNDS):
+
+    def step(lbl: DataFrame) -> DataFrame:
         cnt = (
             sym.join(lbl, lbl["node"] == sym["src"])
             .groupBy(F.col("dst").alias("n2"), "lbl")
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        best = F.max_by(
-            F.col("lbl"), F.struct(F.col("n"), (-F.col("lbl")).alias("neg"))
-        )
-        lbl = (
-            cnt.groupBy(F.col("n2").alias("node"))
-            .agg(best.alias("lbl"))
-            .localCheckpoint(eager=True)
-        )
+        return cnt.groupBy(F.col("n2").alias("node")).agg(best.alias("lbl"))
+
+    nodes = sym.select(F.col("src").alias("node")).distinct()
+    lbl, _ = iterate(nodes.withColumn("lbl", F.col("node")), step, LPA_ROUNDS)
     return lbl.select("node", F.col("lbl").alias("community"))
 
 
@@ -361,43 +413,33 @@ BFS_HOPS = 3
 BFS_SEED_MOD = 50
 
 
-
-
 def bfs_hops(sym: DataFrame, seeds: DataFrame, hops: int = BFS_HOPS) -> DataFrame:
     """(node, hops) minimum hop distance from ``seeds`` (one ``node``
     column) over symmetrized ``(src, dst)`` edges, bounded to ``hops``
     synchronous min-relaxation rounds — shared by the oracle-checked
     ``graph_bfs_hops`` and ``Engine.bfs``. MIN relaxation is
     order-independent, so no tiebreaks are needed anywhere."""
-    dist = seeds.select("node").withColumn("d", F.lit(0))
-    for _ in range(hops):
+
+    def step(dist: DataFrame) -> DataFrame:
         relaxed = sym.join(dist, dist["node"] == sym["src"]).select(
             F.col("dst").alias("node"), (F.col("d") + 1).alias("d")
         )
-        dist = (
-            dist.unionByName(relaxed)
-            .groupBy("node")
-            .agg(F.min("d").alias("d"))
-            .localCheckpoint(eager=True)
-        )
+        return dist.unionByName(relaxed).groupBy("node").agg(F.min("d").alias("d"))
+
+    dist, _ = iterate(seeds.select("node").withColumn("d", F.lit(0)), step, hops)
     return dist.select("node", F.col("d").alias("hops"))
 
 
 @register(
     "graph_bfs_hops",
-    oracle=_edges_sql()
-    + """
-    , sym AS (
-        SELECT u AS src, v AS dst FROM edges
-        UNION ALL
-        SELECT v, u FROM edges
-    ),
+    oracle=_sym_sql()
+    + """,
     d0 AS (
         SELECT DISTINCT src AS node, 0 AS d FROM sym
         WHERE src % 50 = 0
     ),
     """
-    + ",".join(_bfs_round_sql(f"d{i}", f"d{i+1}") for i in range(BFS_HOPS))
+    + unroll_sql(_bfs_round_sql, BFS_HOPS, "d{i}", "d{j}")
     + """
     SELECT node, d AS hops FROM d3
     """,
@@ -417,14 +459,9 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per round one shuffle join (frontier × symmetrized edges) and
     one min-combine aggregation whose partials fold map-side; distances
-    are single longs per node. ``localCheckpoint`` cuts the growing
+    are single longs per node. ``iterate`` cuts the growing
     lineage each round — the Pregel-on-DataFrames shape at any scale."""
-    e = cooccurrence_edges(spark, sf_dir)
-    sym = (
-        e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionByName(e.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint(eager=True)
-    )
+    sym = symmetrize(cooccurrence_edges(spark, sf_dir)).localCheckpoint(eager=True)
     seeds = (
         sym.select(F.col("src").alias("node"))
         .filter(F.col("node") % BFS_SEED_MOD == 0)
@@ -435,13 +472,8 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_jaccard_neighbors",
-    oracle=_edges_sql(TRI_MAX_USER)
-    + """
-    , sym AS (
-        SELECT u AS src, v AS dst FROM edges
-        UNION ALL
-        SELECT v, u FROM edges
-    ),
+    oracle=_sym_sql(TRI_MAX_USER)
+    + """,
     deg AS (SELECT src AS node, COUNT(*) AS d FROM sym GROUP BY src),
     common AS (
         SELECT e.u, e.v, COUNT(*) AS n_common
@@ -480,9 +512,7 @@ def graph_jaccard_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = cooccurrence_edges(spark, sf_dir, max_user=TRI_MAX_USER).localCheckpoint(
         eager=True
     )
-    sym = e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionByName(
-        e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    )
+    sym = symmetrize(e)
     deg = sym.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("d"))
     a, b = sym.alias("a"), sym.alias("b")
     common = (
@@ -537,17 +567,12 @@ PR_EXACT_ROUNDS = 3
 
 @register(
     "graph_pagerank_exact",
-    oracle=_edges_sql()
-    + """
-    , sym AS (
-        SELECT u AS src, v AS dst FROM edges
-        UNION ALL
-        SELECT v, u FROM edges
-    ),
+    oracle=_sym_sql()
+    + """,
     deg AS (SELECT src AS node, COUNT(*) AS out_deg FROM sym GROUP BY src),
     r0 AS (SELECT node, CAST(1.0 AS DECIMAL(20,12)) AS rank FROM deg),
     """
-    + ",".join(_pr_round_sql(f"r{i}", f"r{i+1}") for i in range(PR_EXACT_ROUNDS))
+    + unroll_sql(_pr_round_sql, PR_EXACT_ROUNDS, "r{i}", "r{j}")
     + """
     SELECT node, ROUND(CAST(rank AS DOUBLE), 6) AS rank FROM r3
     """,
@@ -566,47 +591,33 @@ def graph_pagerank_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the iteration's semantics cross-engine.
 
     Scale profile identical to graph_pagerank: per round one key join +
-    one map-side-combining decimal sum; localCheckpoint cuts lineage."""
-    e = cooccurrence_edges(spark, sf_dir)
-    sym = (
-        e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionByName(e.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-        .localCheckpoint(eager=True)
+    one map-side-combining decimal sum; ``iterate`` cuts lineage."""
+    sym, deg = _rank_graph(cooccurrence_edges(spark, sf_dir))
+
+    def step(ranks: DataFrame) -> DataFrame:
+        return _exact_shares(ranks, deg, sym).groupBy("node").agg(
+            F.round(
+                F.lit(0.15) + F.lit(0.85) * F.sum("share").cast("double"),
+                12,
+            )
+            .cast("decimal(20,12)")
+            .alias("rank")
+        )
+
+    ranks, _ = iterate(
+        deg.select("node", F.lit(1.0).cast("decimal(20,12)").alias("rank")),
+        step,
+        PR_EXACT_ROUNDS,
     )
-    deg = sym.groupBy(F.col("src").alias("node")).agg(
-        F.count(F.lit(1)).alias("out_deg")
-    ).localCheckpoint(eager=True)
-    ranks = deg.select("node", F.lit(1.0).cast("decimal(20,12)").alias("rank"))
-    for _ in range(PR_EXACT_ROUNDS):
-        shares = (
-            ranks.join(deg, "node")
-            .select(
-                "node",
-                F.round(
-                    F.col("rank").cast("double") / F.col("out_deg"), 12
-                )
-                .cast("decimal(20,12)")
-                .alias("share"),
-            )
-            .join(sym, F.col("node") == F.col("src"))
-            .select(F.col("dst").alias("node"), "share")
-        )
-        ranks = (
-            shares.groupBy("node")
-            .agg(
-                F.round(
-                    F.lit(0.15) + F.lit(0.85) * F.sum("share").cast("double"),
-                    12,
-                )
-                .cast("decimal(20,12)")
-                .alias("rank")
-            )
-            .localCheckpoint(eager=True)
-        )
     return ranks.select("node", F.round(F.col("rank").cast("double"), 6).alias("rank"))
 
 
-def _kcore_round_sql(prev: str, out: str, k: int) -> str:
+#: k-core parameters: threshold and fixed peel rounds (unrolled in SQL).
+KCORE_K = 5
+KCORE_ROUNDS = 3
+
+
+def _kcore_round_sql(prev: str, out: str) -> str:
     """One k-core peel: degrees over the surviving edge set, keep nodes
     with degree ≥ k, keep edges between kept nodes. Every CTE is
     MATERIALIZED (r13, the HITS-oracle lesson): each round references
@@ -620,7 +631,7 @@ def _kcore_round_sql(prev: str, out: str, k: int) -> str:
             SELECT v FROM {prev}
         ) GROUP BY node
     ),
-    {out}_keep AS MATERIALIZED (SELECT node FROM {out}_deg WHERE d >= {k}),
+    {out}_keep AS MATERIALIZED (SELECT node FROM {out}_deg WHERE d >= {KCORE_K}),
     {out} AS MATERIALIZED (
         SELECT e.u, e.v FROM {prev} e
         JOIN {out}_keep a ON a.node = e.u
@@ -628,19 +639,11 @@ def _kcore_round_sql(prev: str, out: str, k: int) -> str:
     )"""
 
 
-#: k-core parameters: threshold and fixed peel rounds (unrolled in SQL).
-KCORE_K = 5
-KCORE_ROUNDS = 3
-
-
 @register(
     "graph_kcore_peel",
     oracle=_edges_sql()
     + ", e0 AS MATERIALIZED (SELECT u, v FROM edges),"
-    + ",".join(
-        _kcore_round_sql(f"e{i}", f"e{i+1}", KCORE_K)
-        for i in range(KCORE_ROUNDS)
-    )
+    + unroll_sql(_kcore_round_sql, KCORE_ROUNDS, "e{i}", "e{j}")
     + f"""
     SELECT node, COUNT(*) AS degree FROM (
         SELECT u AS node FROM e{KCORE_ROUNDS}
@@ -662,30 +665,24 @@ def graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     (documented, not hidden).
 
     Scale: per round one degree aggregation (map-side combining) + one
-    semi-join-shaped edge filter; edge set only shrinks. localCheckpoint
-    per round cuts lineage — the same Pregel-on-DataFrames profile as
+    semi-join-shaped edge filter; edge set only shrinks. ``iterate``
+    cuts lineage per round — the same Pregel-on-DataFrames profile as
     BFS/LPA."""
-    e = cooccurrence_edges(spark, sf_dir).localCheckpoint(eager=True)
-    for _ in range(KCORE_ROUNDS):
-        deg = (
-            e.select(F.col("u").alias("node"))
-            .unionByName(e.select(F.col("v").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        keep = deg.filter(F.col("d") >= KCORE_K).select("node")
-        e = (
+
+    def step(e: DataFrame) -> DataFrame:
+        keep = _degrees(e).filter(F.col("degree") >= KCORE_K).select("node")
+        return (
             e.join(keep.withColumnRenamed("node", "u"), "u", "left_semi")
             .join(keep.withColumnRenamed("node", "v"), "v", "left_semi")
             .select("u", "v")
-            .localCheckpoint(eager=True)
         )
-    return (
-        e.select(F.col("u").alias("node"))
-        .unionByName(e.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
+
+    e, _ = iterate(
+        cooccurrence_edges(spark, sf_dir).localCheckpoint(eager=True),
+        step,
+        KCORE_ROUNDS,
     )
+    return _degrees(e)
 
 
 # ---------------------------------------------------------------------------
@@ -709,26 +706,8 @@ def weighted_cooccurrence_edges(
     tie-strength weight, mapped to an integer traversal cost
     ``floor(1e6 / n_shared) + 1`` (stronger ties are cheaper; exact
     integer arithmetic in both engines)."""
-    e = load(spark, sf_dir, "events")
-    if max_user is not None:
-        e = e.filter(F.col("user_id") < max_user)
-    m = (
-        e.select("event_type", ts_us(e).alias("ts_us"), "user_id")
-        .select(
-            "event_type",
-            F.expr(f"ts_us div {BUCKET_US}").alias("bucket"),
-            "user_id",
-        )
-        .distinct()
-    )
-    a, b = m.alias("a"), m.alias("b")
     return (
-        a.join(
-            b,
-            (F.col("a.event_type") == F.col("b.event_type"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.user_id") < F.col("b.user_id")),
-        )
+        _bucket_pairs(spark, sf_dir, max_user)
         .groupBy(
             F.col("a.user_id").alias("u"), F.col("b.user_id").alias("v")
         )
@@ -811,15 +790,7 @@ def graph_shortest_path_k3(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: integer costs, MIN over exact integers; sources and the
     node cap are value-pinned, not data-ordered."""
     we = weighted_cooccurrence_edges(spark, sf_dir, max_user=SP_MAX_USER)
-    sym = (
-        we.select("u", "v", "cost")
-        .unionByName(
-            we.select(
-                F.col("v").alias("u"), F.col("u").alias("v"), "cost"
-            )
-        )
-        .localCheckpoint(eager=False)
-    )
+    sym = symmetrize(we, "cost", names=("u", "v")).localCheckpoint(eager=False)
     dist = (
         sym.select(F.col("u").alias("source"))
         .filter(F.col("source") < 5)
@@ -830,18 +801,20 @@ def graph_shortest_path_k3(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0).cast("bigint").alias("dist"),
         )
     )
-    for _ in range(SP_ROUNDS):
+
+    def step(dist: DataFrame) -> DataFrame:
         ext = dist.join(sym, dist["node"] == sym["u"]).select(
             "source",
             F.col("v").alias("__node"),
             (F.col("dist") + F.col("cost")).alias("__d"),
         ).withColumnRenamed("__node", "node").withColumnRenamed("__d", "dist")
-        dist = (
+        return (
             dist.unionByName(ext)
             .groupBy("source", "node")
             .agg(F.min("dist").alias("dist"))
-            .localCheckpoint(eager=False)
         )
+
+    dist, _ = iterate(dist, step, SP_ROUNDS)
     return dist
 
 
@@ -1020,10 +993,7 @@ def _hits_round_sql(h_prev: str, a_out: str, h_out: str) -> str:
         SELECT DISTINCT supp, CAST(1.0 AS DECIMAL(20,12)) AS score FROM inc
     ),
     """
-    + ",".join(
-        _hits_round_sql(f"h{i}", f"a{i + 1}", f"h{i + 1}")
-        for i in range(HITS_ROUNDS)
-    )
+    + unroll_sql(_hits_round_sql, HITS_ROUNDS, "h{i}", "a{j}", "h{j}")
     + f"""
     SELECT 'hub' AS kind, supp AS id,
            ROUND(CAST(score AS DOUBLE), 6) AS score
@@ -1049,11 +1019,11 @@ def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per round, two incidence-keyed equi-joins + two map-side-
     combined decimal sums + two 1-row max normalizers — linear in
-    edges, the same profile as PageRank; localCheckpoint cuts lineage
-    per round.
+    edges, the same profile as PageRank. ``iterate`` runs one round per
+    half-round, so only the last raw score set is ever carried: a
+    round's hubs need only the authorities before them, and vice versa.
 
-    Stage-attributed r10 (tools/hits_profile.py — VERDICT r9 asked for
-    the minhash_profile treatment of the registry's cost outlier): the
+    Stage-attributed r10 (HITS_PROFILE_r10.json, SCALING.md): the
     score frames are NODE-cardinality (≤ |supp|+|part|) but, coming off
     a checkpoint+crossJoin, carry no stats, so Spark shuffle-joined the
     full incidence frame per half-round. Forcing ``F.broadcast(score)``
@@ -1077,32 +1047,41 @@ def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("part").alias("np"),
     ).first()
     small_nodes = max(counts["ns"], counts["np"]) <= HITS_BROADCAST_MAX_NODES
-    h = inc.select("supp").distinct().select(
+
+    def sums(score: DataFrame, key: str) -> DataFrame:
+        # one raw half-round: Σ incident scores per ``key`` node
+        return (
+            inc.join(
+                F.broadcast(score) if small_nodes else score,
+                "supp" if key == "part" else "part",
+            )
+            .groupBy(key)
+            .agg(F.sum("score").alias("s"))
+        )
+
+    def norm(raw: DataFrame) -> DataFrame:
+        mx = raw.agg(F.max("s").cast("double").alias("mx"))
+        return raw.crossJoin(F.broadcast(mx)).select(
+            raw.columns[0],
+            F.round(F.col("s").cast("double") / F.col("mx"), 12)
+            .cast("decimal(20,12)")
+            .alias("score"),
+        )
+
+    h0 = inc.select("supp").distinct().select(
         "supp", F.lit(1.0).cast("decimal(20,12)").alias("score")
     )
-    a = None
-    for _ in range(HITS_ROUNDS):
-        for key, join_key in (("part", "supp"), ("supp", "part")):
-            score = h if key == "part" else a
-            raw = (
-                inc.join(
-                    F.broadcast(score) if small_nodes else score, join_key
-                )
-                .groupBy(key)
-                .agg(F.sum("score").alias("s"))
-                .localCheckpoint(eager=True)
-            )
-            mx = raw.agg(F.max("s").cast("double").alias("mx"))
-            out = raw.crossJoin(F.broadcast(mx)).select(
-                key,
-                F.round(F.col("s").cast("double") / F.col("mx"), 12)
-                .cast("decimal(20,12)")
-                .alias("score"),
-            )
-            if key == "part":
-                a = out
-            else:
-                h = out
+    # One kernel round per half-round: the state is the last raw score
+    # set, authorities and hubs in turn, normalized lazily by the next
+    # half-round. Rounds 2..6 run on ``iterate``; the last (hubs) stays
+    # lazy on the returned raw authorities, which are still alive.
+    raw_a, _ = iterate(
+        sums(h0, "part").localCheckpoint(eager=True),
+        lambda raw: sums(norm(raw), "supp" if "part" in raw.columns else "part"),
+        2 * HITS_ROUNDS - 2,
+    )
+    a = norm(raw_a)
+    h = norm(sums(a, "supp"))
     hubs = h.select(
         F.lit("hub").alias("kind"),
         F.col("supp").alias("id"),
@@ -1118,18 +1097,8 @@ def graph_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_modularity",
-    oracle=_edges_sql()
-    + """
-    , sym AS (
-        SELECT u AS src, v AS dst FROM edges
-        UNION ALL
-        SELECT v, u FROM edges
-    ),
-    lbl0 AS (SELECT DISTINCT src AS node, src AS lbl FROM sym),
-    """
-    + ",".join(
-        _lpa_round_sql(f"lbl{i}", f"lbl{i + 1}") for i in range(LPA_ROUNDS)
-    )
+    oracle=_sym_sql()
+    + _LPA_SQL
     + f""",
     comm AS (SELECT node, lbl AS community FROM lbl{LPA_ROUNDS}),
     mtot AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM edges),
@@ -1167,15 +1136,14 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integers (edge counts, degree sums) with one fixed IEEE
     expression per community. Composes two existing oracle-checked
     pieces: ``cooccurrence_edges`` and the deterministic synchronous
-    LPA (same unrolled rounds in the oracle).
+    LPA (:func:`label_propagation`, same unrolled rounds in the oracle)
+    run on the one checkpointed edge frame.
 
     Scale: the partition join (edges ⋈ community×2) is edge-linear and
     key-shuffled; degree/count aggregates are map-side combined; the
     1-row edge total broadcasts. 100 TB-safe."""
     e = cooccurrence_edges(spark, sf_dir).localCheckpoint(eager=True)
-    comm = graph_label_propagation(spark, sf_dir).localCheckpoint(
-        eager=True
-    )
+    comm = label_propagation(e)
     m_row = F.broadcast(e.agg(F.count(F.lit(1)).alias("m")))
     ca = comm.select(F.col("node").alias("u"), F.col("community"))
     cb = comm.select(
@@ -1188,10 +1156,7 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("community")
         .agg(F.count(F.lit(1)).alias("m_c"))
     )
-    sym = e.select(F.col("u").alias("node")).unionByName(
-        e.select(F.col("v").alias("node"))
-    )
-    deg = sym.groupBy("node").agg(F.count(F.lit(1)).alias("d"))
+    deg = _degrees(e, "d")
     dsum = comm.join(deg, "node").groupBy("community").agg(
         F.count(F.lit(1)).alias("n_nodes"), F.sum("d").alias("d_c")
     )
@@ -1251,13 +1216,8 @@ def _ppr_round_sql(prev: str, out: str) -> str:
 
 @register(
     "graph_personalized_pagerank",
-    oracle=_edges_sql()
-    + f"""
-    , sym AS (
-        SELECT u AS src, v AS dst FROM edges
-        UNION ALL
-        SELECT v, u FROM edges
-    ),
+    oracle=_sym_sql()
+    + f""",
     deg AS (SELECT src AS node, COUNT(*) AS out_deg FROM sym GROUP BY src),
     seeds AS (SELECT node FROM deg ORDER BY node LIMIT {PPR_SEEDS}),
     r0 AS (
@@ -1267,9 +1227,7 @@ def _ppr_round_sql(prev: str, out: str) -> str:
         FROM deg d LEFT JOIN seeds s ON s.node = d.node
     ),
     """
-    + ",".join(
-        _ppr_round_sql(f"r{i}", f"r{i+1}") for i in range(PPR_ROUNDS)
-    )
+    + unroll_sql(_ppr_round_sql, PPR_ROUNDS, "r{i}", "r{j}")
     + f"""
     SELECT node, ROUND(CAST(rank AS DOUBLE), 6) AS rank
     FROM r{PPR_ROUNDS}
@@ -1297,57 +1255,29 @@ def graph_personalized_pagerank(
     handful of seeds touches a vanishing fraction of the graph).
 
     Scale: per round one frontier join + map-side-combined decimal sum
-    + broadcast seed membership; localCheckpoint cuts lineage."""
-    e = cooccurrence_edges(spark, sf_dir)
-    sym = (
-        e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
-        .unionByName(
-            e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-        )
-        .localCheckpoint(eager=True)
+    + broadcast seed membership; ``iterate`` cuts lineage."""
+    sym, deg = _rank_graph(cooccurrence_edges(spark, sf_dir))
+    seeds = F.broadcast(
+        deg.select(F.col("node").alias("seed_node"))
+        .orderBy("seed_node")
+        .limit(PPR_SEEDS)
     )
-    deg = (
-        sym.groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).alias("out_deg"))
-        .localCheckpoint(eager=True)
-    )
-    seeds = deg.select("node").orderBy("node").limit(PPR_SEEDS)
     is_seed = F.col("seed_node").isNotNull()
-    ranks = deg.join(
-        F.broadcast(seeds.withColumnRenamed("node", "seed_node")),
-        deg["node"] == F.col("seed_node"),
-        "left",
-    ).select(
+    ranks = deg.join(seeds, deg["node"] == F.col("seed_node"), "left").select(
         "node",
         F.when(is_seed, F.lit(1.0))
         .otherwise(F.lit(0.0))
         .cast("decimal(20,12)")
         .alias("rank"),
     )
-    for _ in range(PPR_ROUNDS):
-        shares = (
-            ranks.filter(F.col("rank") != 0)
-            .join(deg, "node")
-            .select(
-                "node",
-                F.round(
-                    F.col("rank").cast("double") / F.col("out_deg"), 12
-                )
-                .cast("decimal(20,12)")
-                .alias("share"),
-            )
-            .join(sym, F.col("node") == F.col("src"))
-            .select(F.col("dst").alias("node"), "share")
-        )
+
+    def step(ranks: DataFrame) -> DataFrame:
+        shares = _exact_shares(ranks.filter(F.col("rank") != 0), deg, sym)
         summed = shares.groupBy("node").agg(F.sum("share").alias("s"))
-        ranks = (
+        return (
             deg.select("node")
             .join(summed, "node", "left")
-            .join(
-                F.broadcast(seeds.withColumnRenamed("node", "seed_node")),
-                F.col("node") == F.col("seed_node"),
-                "left",
-            )
+            .join(seeds, F.col("node") == F.col("seed_node"), "left")
             .select(
                 "node",
                 F.round(
@@ -1361,8 +1291,9 @@ def graph_personalized_pagerank(
                 .cast("decimal(20,12)")
                 .alias("rank"),
             )
-            .localCheckpoint(eager=True)
         )
+
+    ranks, _ = iterate(ranks, step, PPR_ROUNDS)
     return ranks.filter(F.col("rank") != 0).select(
         "node", F.round(F.col("rank").cast("double"), 6).alias("rank")
     )
@@ -1432,10 +1363,7 @@ def local_clustering_coefficients(e: DataFrame) -> DataFrame:
     ``graph_clustering_coefficient`` is its registered oracle-checked
     instance (the facade-parity single-source rule)."""
     tcount = triangle_counts(e).withColumnRenamed("n_triangles", "t")
-    nodes = e.select(F.col("u").alias("node")).unionAll(
-        e.select(F.col("v").alias("node"))
-    )
-    deg = nodes.groupBy("node").agg(F.count(F.lit(1)).cast("bigint").alias("degree"))
+    deg = _degrees(e)
     t = F.coalesce(F.col("t"), F.lit(0)).cast("bigint")
     return (
         deg.filter(F.col("degree") >= 2)
@@ -1531,15 +1459,8 @@ def degree_assortativity(e: DataFrame) -> DataFrame:
     undirected (u, v) edge frame — the library form the Engine facade
     exposes; ``graph_degree_assortativity`` is its registered
     oracle-checked instance (facade-parity single-source rule)."""
-    nodes = e.select(F.col("u").alias("node")).unionAll(
-        e.select(F.col("v").alias("node"))
-    )
-    deg = nodes.groupBy("node").agg(
-        F.count(F.lit(1)).cast("bigint").alias("d")
-    )
-    sym = e.select(F.col("u").alias("s"), F.col("v").alias("t")).unionAll(
-        e.select(F.col("v").alias("s"), F.col("u").alias("t"))
-    )
+    deg = _degrees(e, "d")
+    sym = symmetrize(e, names=("s", "t"))
     pairs = (
         sym.join(deg.withColumnRenamed("node", "s").withColumnRenamed("d", "j"), "s")
         .join(deg.withColumnRenamed("node", "t").withColumnRenamed("d", "k"), "t")
@@ -1705,18 +1626,10 @@ def scc(
     vertex (isolated vertices become singleton SCCs). Targets
     condensation/domain graphs (≤ thousands of nodes) where the
     closure frame is ≤ nodes² rows; ``rounds`` must be ≥ log₂ of the
-    longest simple path (the loop also stops early on convergence)."""
-    edges = (
-        edges
-        # the closure frame is <= nodes^2 rows by construction: collapse
-        # it to ONE partition so the doubling rounds pay no 32-way
-        # shuffle overhead (grid-sized data, fixed-cost stages)
-        .coalesce(1)
-        .localCheckpoint(eager=True)  # consumed every doubling round
-    )
-    reach = edges
-    n_reach = reach.count()
-    for _ in range(rounds):
+    longest simple path (the loop also stops early once a round leaves
+    the closure's row count unchanged)."""
+
+    def double(reach: DataFrame) -> DataFrame:
         hop = (
             reach.alias("a")
             .join(
@@ -1724,14 +1637,17 @@ def scc(
             )
             .select(F.col("a.src").alias("src"), F.col("b.dst").alias("dst"))
         )
-        reach = (
-            reach.unionByName(hop).distinct().coalesce(1)
-            .localCheckpoint(eager=True)
-        )
-        n_next = reach.count()  # cached frame — a cheap driver scalar
-        if n_next == n_reach:  # closure converged before the bound
-            break
-        n_reach = n_next
+        # the closure frame is <= nodes^2 rows by construction: collapse
+        # it to ONE partition so the doubling rounds pay no 32-way
+        # shuffle overhead (grid-sized data, fixed-cost stages)
+        return reach.unionByName(hop).distinct().coalesce(1)
+
+    reach, _ = iterate(
+        edges.coalesce(1).localCheckpoint(eager=True),
+        double,
+        rounds,
+        until=F.count(F.lit(1)),
+    )
     mutual = (
         reach.alias("x")
         .join(

@@ -16,6 +16,11 @@ from avro_parquet_spark_example_spark.operators.capping import (
     admitted_keys,
     group_sizes,
 )
+from avro_parquet_spark_example_spark.operators.iteration import (
+    iterate,
+    symmetrize,
+    unroll_sql,
+)
 from avro_parquet_spark_example_spark.registry import register
 from avro_parquet_spark_example_spark.sources.catalog import load
 
@@ -1926,9 +1931,7 @@ def _tr_round_sql(prev: str, out: str) -> str:
     ),
     r0 AS (SELECT t, CAST(1.0 AS DECIMAL(20,12)) AS rank FROM strength),
     """
-    + ",".join(
-        _tr_round_sql(f"r{i}", f"r{i + 1}") for i in range(TEXTRANK_ROUNDS)
-    )
+    + unroll_sql(_tr_round_sql, TEXTRANK_ROUNDS, "r{i}", "r{j}")
     + f"""
     SELECT t AS token, ROUND(CAST(rank AS DOUBLE), 6) AS rank
     FROM r{TEXTRANK_ROUNDS}
@@ -1972,22 +1975,12 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.count(F.lit(1)).alias("w"))
     )
-    tsym = (
-        tedges.select(F.col("u").alias("src"), F.col("v").alias("dst"), "w")
-        .unionByName(
-            tedges.select(
-                F.col("v").alias("src"), F.col("u").alias("dst"), "w"
-            )
-        )
-        .localCheckpoint(eager=True)
-    )
+    tsym = symmetrize(tedges, "w").localCheckpoint(eager=True)
     strength = tsym.groupBy(F.col("src").alias("t")).agg(
         F.sum("w").cast("double").alias("str")
     ).localCheckpoint(eager=True)
-    ranks = strength.select(
-        "t", F.lit(1.0).cast("decimal(20,12)").alias("rank")
-    )
-    for _ in range(TEXTRANK_ROUNDS):
+
+    def step(ranks: DataFrame) -> DataFrame:
         shares = (
             ranks.join(strength, "t")
             .join(tsym, F.col("t") == F.col("src"))
@@ -2001,19 +1994,20 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .alias("share"),
             )
         )
-        ranks = (
-            shares.groupBy(F.col("t2").alias("t"))
-            .agg(
-                F.round(
-                    F.lit(0.15)
-                    + F.lit(0.85) * F.sum("share").cast("double"),
-                    12,
-                )
-                .cast("decimal(20,12)")
-                .alias("rank")
+        return shares.groupBy(F.col("t2").alias("t")).agg(
+            F.round(
+                F.lit(0.15) + F.lit(0.85) * F.sum("share").cast("double"),
+                12,
             )
-            .localCheckpoint(eager=True)
+            .cast("decimal(20,12)")
+            .alias("rank")
         )
+
+    ranks, _ = iterate(
+        strength.select("t", F.lit(1.0).cast("decimal(20,12)").alias("rank")),
+        step,
+        TEXTRANK_ROUNDS,
+    )
     return (
         ranks.select(
             F.col("t").alias("token"),

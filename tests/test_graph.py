@@ -10,14 +10,42 @@ from pyspark.sql import functions as F
 from avro_parquet_spark_example_spark.registry import get_query
 
 from avro_parquet_spark_example_spark.operators.graph import (
+    bfs_hops,
     cooccurrence_edges,
     graph_pagerank,
+    pagerank_edges,
 )
+from avro_parquet_spark_example_spark.operators.iteration import symmetrize
 
 
 @pytest.fixture(scope="module")
 def edges(spark, sf_dir):
     return cooccurrence_edges(spark, sf_dir).cache()
+
+
+def test_iterate_keeps_one_generation_alive(spark, edges):
+    """The round loops free every checkpoint generation they replace:
+    after bfs_hops / pagerank_edges return, at most one kernel-made
+    generation (the returned one) is still persisted, and it stays
+    readable."""
+    jsc = spark.sparkContext._jsc.sc()
+
+    def persisted():
+        return jsc.getPersistentRDDs().size()
+
+    sym = symmetrize(edges).localCheckpoint(eager=True)
+    seeds = sym.select(F.col("src").alias("node")).filter("node % 50 = 0").distinct()
+    before = persisted()
+    hops = bfs_hops(sym, seeds, hops=3)
+    assert persisted() - before <= 1
+    assert hops.count() > 0
+
+    before = persisted()
+    ranks = pagerank_edges(edges, iters=5)
+    # + the symmetrized edges and out-degree table pagerank_edges
+    # checkpoints for itself, outside the loop
+    assert persisted() - before <= 1 + 2
+    assert ranks.count() > 0
 
 
 def test_edges_oriented_and_distinct(edges):

@@ -261,3 +261,27 @@ def test_cc_observer_local_and_iterative(spark):
     assert dd.LAST_CC_INFO["mode"] == "iterative"
     assert dd.LAST_CC_INFO["rounds"] == 2
     assert set(labels2.values()) == {0}
+
+    # each iterative round is ONE Spark job: the fixpoint sum is observed
+    # on the round's checkpoint job, not collected by a job of its own.
+    # Counted with AQE off, where an eager checkpoint is exactly one job
+    # (AQE adds a job per shuffle stage); the 2-round minus the 1-round
+    # run isolates the second round.
+    sc = spark.sparkContext
+
+    def jobs(max_iter):
+        group = f"cc-rounds-{max_iter}"
+        sc.setJobGroup(group, group)
+        try:
+            dd.connected_components(clique, max_iter=max_iter, local_threshold=2)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert dd.LAST_CC_INFO["rounds"] == max_iter
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        assert jobs(2) - jobs(1) == 1
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)

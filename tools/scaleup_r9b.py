@@ -1,7 +1,7 @@
 """10× scale-up stress for the round-9 second-wave operators
 (SCALING.md §Round-9 second-wave measured scale-up).
 
-Extends tools/events_scaleup_r9.py's key-shifted ×10 synthesis to EVERY
+Extends the round-9 key-shifted ×10 events synthesis (SCALING.md) to EVERY
 table the new operators consume — events, orders, customer (FK-consistent
 with orders), lineitem (order/part/supp keys all shifted so the bipartite
 graph genuinely grows), documents, embeddings — then times each operator
