@@ -218,14 +218,8 @@ def minhash_signatures_df(
         F.col("__t").isNotNull()
     )
     # A small parquet input yields few splits (sf0.1 documents: 2), leaving
-    # the shingle+hash stage underparallelized; widen to the cluster's
-    # parallelism when — and only when — the scan is narrower than it
-    # (production-size tables have enough splits, making this a no-op, so
-    # no gratuitous full-text shuffle at scale). Measured −0.25 s at sf0.1.
-    target = docs.sparkSession.sparkContext.defaultParallelism
-    if base.rdd.getNumPartitions() < target:
-        base = base.repartition(target)
-    shingled = with_shingles(base, text_col="__t")
+    # the shingle+hash stage underparallelized. Measured −0.25 s at sf0.1.
+    shingled = with_shingles(spread(base), text_col="__t")
     exploded = shingled.select("id", F.explode("sh").alias("s")).select(
         "id", F.xxhash64("s").alias("h")
     )

@@ -5,13 +5,16 @@ reference declared record types in Avro schemas and generated JVM classes
 with sbt-avro, then relied on parquet-avro's ``AvroSchemaConverter`` to map
 them onto Parquet (SURVEY.md §0 steps 1–2, reconstructed — the reference
 checkout is empty here, see SURVEY.md §0 provenance). On modern Spark the
-storage side is native (``spark.read.parquet``), so what remains of Avro is
-its role as a *schema language*: this module translates any Avro schema
-document into the equivalent ``pyspark.sql.types.StructType`` which can be
-applied as a declared read schema (see ``sources/scans.py::avro_schema_read``).
+storage side is native (``spark.read.parquet``), so Avro serves first as a
+*schema language*: this module translates any Avro schema document into
+the equivalent ``pyspark.sql.types.StructType`` which can be applied as a
+declared read schema (see ``sources/scans.py::avro_schema_read``).
 
 Pure Python, no Avro library required (none is installed in this
-environment). Full Avro 1.x type surface:
+environment). The schema walk itself lives in ``avro_binary.compile_schema``,
+which builds the Spark type together with the codec that reads and writes
+it, so a type announced here is the type the ``avrofile`` source decodes.
+Full Avro 1.x type surface:
 
   primitives        string/int/long/float/double/boolean/bytes/null
   union with null   → nullable T (general unions of 2+ non-null branches are
@@ -20,12 +23,13 @@ environment). Full Avro 1.x type surface:
   array / map       → ArrayType / MapType(string, T)
   enum              → StringType (symbol name)
   fixed             → BinaryType
-  logical types     decimal / date / time-millis|micros /
-                     timestamp-millis|micros / local-timestamp-*
+  logical types     decimal / date / timestamp-millis|micros /
+                    local-timestamp-millis|micros; time-millis|micros and
+                    uuid keep their base type (int / long / string)
 
-Avro file IO is out of scope offline (no spark-avro jar is bundled); on a
-networked cluster add ``--packages org.apache.spark:spark-avro_2.13:<ver>``
-and ``spark.read.format("avro")`` composes with everything here.
+Avro container files are read and written by ``sources/avro_binary.py`` and
+``sources/avro_datasource.py`` (``spark.read.format("avrofile")``), with no
+spark-avro jar.
 """
 
 from __future__ import annotations
@@ -36,174 +40,23 @@ from typing import Any
 
 from pyspark.sql import types as T
 
-_PRIMITIVES: dict[str, T.DataType] = {
-    "string": T.StringType(),
-    "int": T.IntegerType(),
-    "long": T.LongType(),
-    "float": T.FloatType(),
-    "double": T.DoubleType(),
-    "boolean": T.BooleanType(),
-    "bytes": T.BinaryType(),
-    "null": T.NullType(),
-}
-
-_LOGICAL: dict[str, T.DataType] = {
-    "date": T.DateType(),
-    "time-millis": T.IntegerType(),
-    "time-micros": T.LongType(),
-    "timestamp-millis": T.TimestampType(),
-    "timestamp-micros": T.TimestampType(),
-    "local-timestamp-millis": T.TimestampNTZType(),
-    "local-timestamp-micros": T.TimestampNTZType(),
-    "uuid": T.StringType(),
-}
-
-
-class AvroSchemaError(ValueError):
-    """Raised for malformed or untranslatable Avro schemas."""
+from avro_parquet_spark_example_spark.sources.avro_binary import (
+    AvroSchemaError,
+    compile_schema,
+)
 
 
 def parse_avro_schema(schema: str | dict | list) -> T.StructType:
     """Translate an Avro schema (JSON string or parsed dict) to StructType.
 
-    The top level must be a record (as in the reference's User schema);
-    use :func:`_translate` for inner types.
+    The top level must be a record (as in the reference's User schema).
     """
     if isinstance(schema, str):
         schema = json.loads(schema)
-    named: dict[str, T.DataType] = {}
-    dt = _translate(schema, named, None)
+    dt = compile_schema(schema)[0]
     if not isinstance(dt, T.StructType):
         raise AvroSchemaError(f"top-level Avro schema must be a record, got {dt}")
     return dt
-
-
-def _resolve_ref(ref: str, named: dict[str, T.DataType], ns: str | None) -> T.DataType:
-    """Resolve a named-type reference per the Avro spec: a dotted name is a
-    fullname looked up as-is; a bare name resolves relative to the enclosing
-    namespace first, then the null namespace. Named types are registered
-    under fullname ONLY — two records sharing a simple name in different
-    namespaces stay distinct instead of the later silently shadowing the
-    earlier."""
-    if "." in ref:
-        if ref in named:
-            return named[ref]
-    else:
-        if ns and f"{ns}.{ref}" in named:
-            return named[f"{ns}.{ref}"]
-        if ref in named:  # null-namespace definition
-            return named[ref]
-    raise AvroSchemaError(f"unknown Avro type reference: {ref!r} (namespace {ns!r})")
-
-
-def _translate(
-    node: Any, named: dict[str, T.DataType], ns: str | None
-) -> T.DataType:
-    if isinstance(node, str):
-        if node in _PRIMITIVES:
-            return _PRIMITIVES[node]
-        return _resolve_ref(node, named, ns)
-
-    if isinstance(node, list):  # union
-        non_null = [b for b in node if b != "null"]
-        if len(non_null) != 1:
-            raise AvroSchemaError(
-                f"only unions of one type with null are translatable, got {node!r}"
-            )
-        return _translate(non_null[0], named, ns)
-
-    if not isinstance(node, dict):
-        raise AvroSchemaError(f"malformed Avro schema node: {node!r}")
-
-    logical = node.get("logicalType")
-    if logical:
-        if logical == "decimal":
-            precision = int(node.get("precision", 10))
-            scale = int(node.get("scale", 0))
-            return T.DecimalType(precision, scale)
-        if logical in _LOGICAL:
-            return _LOGICAL[logical]
-        # Unknown logical types fall back to the underlying Avro type.
-
-    kind = node.get("type")
-    if kind in _PRIMITIVES:  # unknown logical types fall back to base type
-        return _PRIMITIVES[kind]
-
-    if kind == "record":
-        fullname, inner_ns = _fullname_and_ns(node, ns)
-        fields = []
-        for f in node.get("fields", []):
-            ftype = f["type"]
-            nullable = _is_nullable(ftype)
-            fields.append(
-                T.StructField(
-                    f["name"],
-                    _translate(ftype, named, inner_ns),
-                    nullable=nullable,
-                    metadata={"doc": f["doc"]} if "doc" in f else None,
-                )
-            )
-        st = T.StructType(fields)
-        if fullname:
-            _define(named, fullname, st)
-        return st
-
-    if kind == "array":
-        items = node["items"]
-        return T.ArrayType(
-            _translate(items, named, ns), containsNull=_is_nullable(items)
-        )
-
-    if kind == "map":
-        values = node["values"]
-        return T.MapType(
-            T.StringType(),
-            _translate(values, named, ns),
-            valueContainsNull=_is_nullable(values),
-        )
-
-    if kind == "enum":
-        fullname, _ = _fullname_and_ns(node, ns)
-        if fullname:
-            _define(named, fullname, T.StringType())
-        return T.StringType()
-
-    if kind == "fixed":
-        fullname, _ = _fullname_and_ns(node, ns)
-        if fullname:
-            _define(named, fullname, T.BinaryType())
-        return T.BinaryType()
-
-    raise AvroSchemaError(f"untranslatable Avro type: {node!r}")
-
-
-def _define(named: dict[str, T.DataType], fullname: str, dt: T.DataType) -> None:
-    """Register a named type under its fullname; Avro forbids redefinition."""
-    if fullname in named:
-        raise AvroSchemaError(f"named type defined twice: {fullname!r}")
-    named[fullname] = dt
-
-
-def _is_nullable(node: Any) -> bool:
-    """Avro nullability = union containing "null" (SURVEY.md §1.2)."""
-    return isinstance(node, list) and "null" in node
-
-
-def _fullname_and_ns(
-    node: dict, enclosing_ns: str | None
-) -> tuple[str | None, str | None]:
-    """Avro-spec naming: a dotted ``name`` is already a fullname (its own
-    ``namespace`` attribute is ignored); otherwise the effective namespace is
-    the node's ``namespace`` attribute if present, else the enclosing one.
-    Returns (fullname, namespace-for-children)."""
-    name = node.get("name")
-    if not name:
-        return None, enclosing_ns
-    if "." in name:
-        ns = name.rsplit(".", 1)[0]
-        return name, ns
-    ns = node.get("namespace", enclosing_ns)
-    return (f"{ns}.{name}" if ns else name), ns
 
 
 _TO_AVRO_PRIMITIVES: dict[type, str] = {

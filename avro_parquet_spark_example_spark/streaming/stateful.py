@@ -20,6 +20,7 @@ import os
 import shutil
 import uuid
 
+import pyarrow.dataset
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -87,8 +88,10 @@ def stream_state_partitions(spark: SparkSession, sf_dir: str) -> int:
     floor 4, capped at the session's shuffle parallelism — so the ×100
     scale-up replay (10M rows) gets the full 32 and an unbounded
     production deployment (which sets shuffle partitions to cluster
-    width) is uncapped. The parquet row count is metadata-only."""
-    n_rows = spark.read.parquet(table_path(sf_dir, "events")).count()
+    width) is uncapped. The row count comes from the Parquet footers, read
+    on the driver, so sizing starts no Spark job; a file table and a
+    directory table count alike."""
+    n_rows = pyarrow.dataset.dataset(table_path(sf_dir, "events")).count_rows()
     cap = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     return max(4, min(cap, n_rows // 25_000))
 

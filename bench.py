@@ -105,24 +105,32 @@ REGRESSION_MARGIN_PTS = 2.0
 
 
 def _prev_bench() -> tuple[str, dict] | None:
-    """Latest committed BENCH_r{N}.json (highest N) in the repo root."""
+    """Latest committed BENCH_r{N}[_c{C}].json (highest N) whose outer
+    ``cpus`` equals this run's ``$SPARK_GRAFT_CPUS`` (the master width
+    ``session.get_session`` uses); None when no record shares it. A record
+    taken at another core count is no noise reference: its timings and
+    calib probes scale with the cores."""
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     root = os.path.dirname(os.path.abspath(__file__))
-    best: tuple[int, str] | None = None
+    best: tuple[int, str, dict] | None = None
     for path in glob.glob(os.path.join(root, "BENCH_r*.json")):
-        m = re.fullmatch(r"BENCH_r(\d+)\.json", os.path.basename(path))
-        if m and (best is None or int(m.group(1)) > best[0]):
-            best = (int(m.group(1)), path)
+        m = re.fullmatch(r"BENCH_r(\d+)(?:_c\d+)?\.json", os.path.basename(path))
+        if not m or (best is not None and int(m.group(1)) <= best[0]):
+            continue
+        try:
+            with open(path) as f:
+                data = json.load(f)
+        except (OSError, json.JSONDecodeError):
+            continue
+        if data.get("cpus") == cpus:
+            best = (int(m.group(1)), path, data)
     if best is None:
         return None
-    try:
-        with open(best[1]) as f:
-            data = json.load(f)
-    except (OSError, json.JSONDecodeError):
-        return None
+    _, path, data = best
     # driver records wrap this script's JSON line under "parsed"
     if isinstance(data.get("parsed"), dict):
         data = data["parsed"]
-    return os.path.basename(best[1]), data
+    return os.path.basename(path), data
 
 
 def _calibrate_scan(spark, sf_dir: str) -> float:
@@ -197,6 +205,12 @@ def _noise_guard(
     machine regression flags (delta > calib delta + margin)."""
     prev = _prev_bench()
     if prev is None:
+        print(
+            "bench: no committed BENCH record at SPARK_GRAFT_CPUS="
+            f"{os.environ.get('SPARK_GRAFT_CPUS', '32')}; no same-core"
+            " reference, comparison skipped",
+            file=sys.stderr,
+        )
         return {}
     ref, pdata = prev
     out: dict = {"prev_ref": ref}
@@ -304,8 +318,8 @@ def _capture(spark, sf_dir: str, queries) -> dict:
 
 
 def _calib_deltas_vs_prev(cap: dict) -> list[float]:
-    """Calib deltas (pct) of this capture vs the latest committed record —
-    empty when there is no prior record to compare against."""
+    """Calib deltas (pct) of this capture vs the latest same-core committed
+    record — empty when there is none to compare against."""
     prev = _prev_bench()
     if prev is None:
         return []

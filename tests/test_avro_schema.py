@@ -37,26 +37,27 @@ def test_user_schema():
     )
 
 
+ALL_TYPES_SCHEMA = {
+    "type": "record",
+    "name": "AllTypes",
+    "fields": [
+        {"name": "l", "type": "long"},
+        {"name": "f", "type": "float"},
+        {"name": "d", "type": "double"},
+        {"name": "b", "type": "boolean"},
+        {"name": "raw", "type": "bytes"},
+        {"name": "dec", "type": {"type": "bytes", "logicalType": "decimal",
+                                  "precision": 12, "scale": 3}},
+        {"name": "day", "type": {"type": "int", "logicalType": "date"}},
+        {"name": "ts", "type": {"type": "long", "logicalType": "timestamp-micros"}},
+        {"name": "lts", "type": {"type": "long",
+                                  "logicalType": "local-timestamp-millis"}},
+    ],
+}
+
+
 def test_primitives_and_logical_types():
-    st = parse_avro_schema(
-        {
-            "type": "record",
-            "name": "AllTypes",
-            "fields": [
-                {"name": "l", "type": "long"},
-                {"name": "f", "type": "float"},
-                {"name": "d", "type": "double"},
-                {"name": "b", "type": "boolean"},
-                {"name": "raw", "type": "bytes"},
-                {"name": "dec", "type": {"type": "bytes", "logicalType": "decimal",
-                                          "precision": 12, "scale": 3}},
-                {"name": "day", "type": {"type": "int", "logicalType": "date"}},
-                {"name": "ts", "type": {"type": "long", "logicalType": "timestamp-micros"}},
-                {"name": "lts", "type": {"type": "long",
-                                          "logicalType": "local-timestamp-millis"}},
-            ],
-        }
-    )
+    st = parse_avro_schema(ALL_TYPES_SCHEMA)
     fields = {f.name: f.dataType for f in st.fields}
     assert fields["l"] == T.LongType()
     assert fields["f"] == T.FloatType()
@@ -67,28 +68,29 @@ def test_primitives_and_logical_types():
     assert fields["lts"] == T.TimestampNTZType()
 
 
-def test_nested_record_map_enum_fixed():
-    st = parse_avro_schema(
+NESTED_SCHEMA = {
+    "type": "record",
+    "name": "Outer",
+    "fields": [
         {
-            "type": "record",
-            "name": "Outer",
-            "fields": [
-                {
-                    "name": "inner",
-                    "type": {
-                        "type": "record",
-                        "name": "Inner",
-                        "fields": [{"name": "x", "type": ["int", "null"]}],
-                    },
-                },
-                {"name": "tags", "type": {"type": "map", "values": "string"}},
-                {"name": "color", "type": {"type": "enum", "name": "Color",
-                                            "symbols": ["RED", "GREEN"]}},
-                {"name": "digest", "type": {"type": "fixed", "name": "MD5", "size": 16}},
-                {"name": "again", "type": "Inner"},
-            ],
-        }
-    )
+            "name": "inner",
+            "type": {
+                "type": "record",
+                "name": "Inner",
+                "fields": [{"name": "x", "type": ["int", "null"]}],
+            },
+        },
+        {"name": "tags", "type": {"type": "map", "values": "string"}},
+        {"name": "color", "type": {"type": "enum", "name": "Color",
+                                    "symbols": ["RED", "GREEN"]}},
+        {"name": "digest", "type": {"type": "fixed", "name": "MD5", "size": 16}},
+        {"name": "again", "type": "Inner"},
+    ],
+}
+
+
+def test_nested_record_map_enum_fixed():
+    st = parse_avro_schema(NESTED_SCHEMA)
     fields = {f.name: f for f in st.fields}
     inner = fields["inner"].dataType
     assert isinstance(inner, T.StructType)
@@ -99,18 +101,19 @@ def test_nested_record_map_enum_fixed():
     assert fields["again"].dataType == inner  # named-type reference reuse
 
 
+UNION_SCHEMA = {
+    "type": "record",
+    "name": "U",
+    "fields": [
+        {"name": "a", "type": ["null", "string"]},
+        {"name": "b", "type": ["string", "null"]},
+        {"name": "c", "type": "string"},
+    ],
+}
+
+
 def test_union_nullability_both_orders():
-    st = parse_avro_schema(
-        {
-            "type": "record",
-            "name": "U",
-            "fields": [
-                {"name": "a", "type": ["null", "string"]},
-                {"name": "b", "type": ["string", "null"]},
-                {"name": "c", "type": "string"},
-            ],
-        }
-    )
+    st = parse_avro_schema(UNION_SCHEMA)
     assert [f.nullable for f in st.fields] == [True, True, False]
 
 
@@ -139,6 +142,35 @@ def test_declared_schema_read_applies(spark, sf_dir):
     assert df.count() > 0
 
 
+RICH_STRUCT = T.StructType(
+    [
+        T.StructField("id", T.LongType(), nullable=False),
+        T.StructField("name", T.StringType(), nullable=True),
+        T.StructField("price", T.DecimalType(12, 2), nullable=True),
+        T.StructField("day", T.DateType(), nullable=False),
+        T.StructField("at", T.TimestampType(), nullable=True),
+        T.StructField(
+            "tags", T.ArrayType(T.StringType(), containsNull=True), nullable=False
+        ),
+        T.StructField(
+            "props",
+            T.MapType(T.StringType(), T.DoubleType(), valueContainsNull=False),
+            nullable=True,
+        ),
+        T.StructField(
+            "address",
+            T.StructType(
+                [
+                    T.StructField("city", T.StringType(), nullable=False),
+                    T.StructField("zip", T.IntegerType(), nullable=True),
+                ]
+            ),
+            nullable=True,
+        ),
+    ]
+)
+
+
 def test_struct_to_avro_round_trip_rich():
     """struct → Avro → struct is the identity over the full supported
     surface (nested record, array, map, decimal/date/timestamp logicals,
@@ -147,33 +179,7 @@ def test_struct_to_avro_round_trip_rich():
         struct_to_avro_schema,
     )
 
-    original = T.StructType(
-        [
-            T.StructField("id", T.LongType(), nullable=False),
-            T.StructField("name", T.StringType(), nullable=True),
-            T.StructField("price", T.DecimalType(12, 2), nullable=True),
-            T.StructField("day", T.DateType(), nullable=False),
-            T.StructField("at", T.TimestampType(), nullable=True),
-            T.StructField(
-                "tags", T.ArrayType(T.StringType(), containsNull=True), nullable=False
-            ),
-            T.StructField(
-                "props",
-                T.MapType(T.StringType(), T.DoubleType(), valueContainsNull=False),
-                nullable=True,
-            ),
-            T.StructField(
-                "address",
-                T.StructType(
-                    [
-                        T.StructField("city", T.StringType(), nullable=False),
-                        T.StructField("zip", T.IntegerType(), nullable=True),
-                    ]
-                ),
-                nullable=True,
-            ),
-        ]
-    )
+    original = RICH_STRUCT
     assert parse_avro_schema(struct_to_avro_schema(original, "Rich")) == original
 
 
@@ -202,6 +208,37 @@ def test_struct_to_avro_widens_and_rejects():
         pass
 
 
+NAMESPACED_SCHEMA = {
+    "type": "record",
+    "name": "Top",
+    "namespace": "a",
+    "fields": [
+        {
+            "name": "first",
+            "type": {
+                "type": "record",
+                "name": "Inner",  # a.Inner
+                "fields": [{"name": "x", "type": "int"}],
+            },
+        },
+        {
+            "name": "second",
+            "type": {
+                "type": "record",
+                "name": "Inner",  # b.Inner — same simple name, other ns
+                "namespace": "b",
+                "fields": [{"name": "y", "type": "string"}],
+            },
+        },
+        # unqualified ref from namespace 'a' → must be a.Inner (x:int)
+        {"name": "ref_unqualified", "type": "Inner"},
+        # fullname refs hit either one explicitly
+        {"name": "ref_a", "type": "a.Inner"},
+        {"name": "ref_b", "type": "b.Inner"},
+    ],
+}
+
+
 def test_namespace_relative_resolution():
     """Two records sharing a simple name in different namespaces stay
     distinct; an unqualified reference resolves against the ENCLOSING
@@ -213,36 +250,7 @@ def test_namespace_relative_resolution():
         parse_avro_schema,
     )
 
-    schema = {
-        "type": "record",
-        "name": "Top",
-        "namespace": "a",
-        "fields": [
-            {
-                "name": "first",
-                "type": {
-                    "type": "record",
-                    "name": "Inner",  # a.Inner
-                    "fields": [{"name": "x", "type": "int"}],
-                },
-            },
-            {
-                "name": "second",
-                "type": {
-                    "type": "record",
-                    "name": "Inner",  # b.Inner — same simple name, other ns
-                    "namespace": "b",
-                    "fields": [{"name": "y", "type": "string"}],
-                },
-            },
-            # unqualified ref from namespace 'a' → must be a.Inner (x:int)
-            {"name": "ref_unqualified", "type": "Inner"},
-            # fullname refs hit either one explicitly
-            {"name": "ref_a", "type": "a.Inner"},
-            {"name": "ref_b", "type": "b.Inner"},
-        ],
-    }
-    st = parse_avro_schema(schema)
+    st = parse_avro_schema(NAMESPACED_SCHEMA)
     by_name = {f.name: f.dataType for f in st.fields}
     assert by_name["ref_unqualified"] == by_name["first"]
     assert by_name["ref_a"] == by_name["first"]
@@ -268,6 +276,25 @@ def test_namespace_relative_resolution():
         parse_avro_schema(dup)
 
 
+DOTTED_SCHEMA = {
+    "type": "record",
+    "name": "com.example.Outer",
+    "namespace": "ignored.ns",
+    "fields": [
+        {
+            "name": "child",
+            "type": {
+                "type": "record",
+                "name": "Child",  # com.example.Child
+                "fields": [{"name": "v", "type": "long"}],
+            },
+        },
+        {"name": "again", "type": "com.example.Child"},
+        {"name": "rel", "type": "Child"},
+    ],
+}
+
+
 def test_dotted_name_is_fullname():
     """A dotted name attribute IS the fullname; children inherit its
     namespace part (Avro spec: namespace attribute is ignored then)."""
@@ -275,24 +302,40 @@ def test_dotted_name_is_fullname():
         parse_avro_schema,
     )
 
-    schema = {
-        "type": "record",
-        "name": "com.example.Outer",
-        "namespace": "ignored.ns",
-        "fields": [
-            {
-                "name": "child",
-                "type": {
-                    "type": "record",
-                    "name": "Child",  # com.example.Child
-                    "fields": [{"name": "v", "type": "long"}],
-                },
-            },
-            {"name": "again", "type": "com.example.Child"},
-            {"name": "rel", "type": "Child"},
-        ],
-    }
-    st = parse_avro_schema(schema)
+    st = parse_avro_schema(DOTTED_SCHEMA)
     by_name = {f.name: f.dataType for f in st.fields}
     assert by_name["again"] == by_name["child"]
     assert by_name["rel"] == by_name["child"]
+
+
+def test_every_accepted_schema_compiles_a_codec():
+    """Every schema this module shows ``parse_avro_schema`` accepting also
+    compiles a decoder and an encoder: the ``avrofile`` source announces the
+    parsed type, so a schema the codec rejects would fail every read task."""
+    from avro_parquet_spark_example_spark.sources import avro_binary
+    from avro_parquet_spark_example_spark.sources.avro_schema import (
+        struct_to_avro_schema,
+    )
+    from avro_parquet_spark_example_spark.sources.scans import (
+        DOCUMENTS_AVRO_SCHEMA,
+    )
+
+    accepted = {
+        "user": USER_SCHEMA,
+        "all_types": ALL_TYPES_SCHEMA,
+        "nested": NESTED_SCHEMA,
+        "union": UNION_SCHEMA,
+        "documents": DOCUMENTS_AVRO_SCHEMA,
+        "rich_export": struct_to_avro_schema(RICH_STRUCT, "Rich"),
+        "namespaced": NAMESPACED_SCHEMA,
+        "dotted": DOTTED_SCHEMA,
+    }
+    failed = {}
+    for name, schema in accepted.items():
+        parse_avro_schema(schema)
+        try:
+            avro_binary.compile_decoder(schema)
+            avro_binary.compile_encoder(schema)
+        except ValueError as e:
+            failed[name] = str(e)
+    assert not failed, failed

@@ -157,9 +157,25 @@ def test_bench_recapture_decision():
     assert not bench._should_recapture([50.0, 50.0, 50.0])
 
 
-def test_bench_calib_deltas_read_latest_record():
+def test_bench_calib_deltas_read_latest_record(monkeypatch):
+    import json
+    import os
+
     import bench
 
+    # the reference is the latest record taken at this run's core count;
+    # the committed records were taken at 32 and at 8 cores
+    root = os.path.dirname(os.path.abspath(bench.__file__))
+    for cpus in (32, 8):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", str(cpus))
+        ref, _ = bench._prev_bench()
+        with open(os.path.join(root, ref)) as f:
+            assert json.load(f)["cpus"] == cpus
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert bench._prev_bench() is None
+    assert bench._calib_deltas_vs_prev({"calib_sec": 1.0}) == []
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
     prev = bench._prev_bench()
     assert prev is not None
     ref, pdata = prev
@@ -186,6 +202,16 @@ def test_stream_state_partitions_sizing(spark, sf_dir):
 
     # sf0.001 events (1k rows) -> floor of 4
     assert stream_state_partitions(spark, sf_dir) == 4
+
+    # the row count is read from the Parquet footers: sizing starts no job
+    sc = spark.sparkContext
+    group = "stream-state-sizing"
+    sc.setJobGroup(group, group)
+    try:
+        assert stream_state_partitions(spark, sf_dir) == 4
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_run_to_table_restores_session_confs(spark, sf_dir):
